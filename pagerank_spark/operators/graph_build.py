@@ -220,7 +220,8 @@ class LinkGraph:
                 F.when(url_satisfies_query_col(F.col("url"), query), 1.0).otherwise(0.0),
             )
         total = v.agg(F.sum("v")).first()[0]
-        assert total and total > 0, "personalization query matches no urls"
+        if not (total and total > 0):
+            raise ValueError("personalization query matches no urls")
         return v.withColumn("v", F.col("v") / F.lit(float(total)))
 
     def search(self, ranks: DataFrame, query: str = "", max_results: int = 10) -> DataFrame:

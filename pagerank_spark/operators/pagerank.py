@@ -12,21 +12,30 @@ Reference semantics (pagerank.py:122-172, "Deeper Inside PageRank" Eq 5.1):
         stop when ||x_new - x_prev||_2 < epsilon
 
 Scale design (SURVEY.md §4):
-  * edges are hash-partitioned on src once (LinkGraph) and the rank vector is
-    checkpointed with the same partitioning on url, so the per-iteration
+  * ``_power_iterate`` is the one power-iteration driver; ``pagerank`` here
+    and ``pagerank_csr`` (operators/pagerank_csr.py) supply only a layout
+    (how the rank vector is partitioned) and a step (the SpMV x -> alpha
+    P'x + q v). Start-up, resume, stats, normalization, metrics and
+    checkpointing are shared.
+  * edges are hash-partitioned on src once (LinkGraph) and the rank vector
+    keeps the same partitioning on url, so the per-iteration
     edges-join-ranks is co-partitioned; the only unavoidable shuffle is the
     groupBy(dst) combine (map-side partial aggregation applies).
   * all per-iteration scalars (dangling mass, norm, residual) come from ONE
-    fused aggregate job over the checkpointed new vector:
+    fused aggregate job over the new vector:
         norm      = sqrt(sum(x_un^2))
         residual  = sqrt(max(0, 2 - 2*sum(x_un*x_prev)/norm))
                     (both x_un/norm and x_prev are unit vectors)
         dangling  = sum(x_un * is_dangling)/norm      (for the NEXT iteration)
-    so each iteration costs exactly 2 jobs: materialize + fused stats.
-  * localCheckpoint each iteration truncates lineage (else the plan doubles
-    per iteration); persistent checkpointing to a directory (resumable, with
-    per-iteration manifests) lives in plans/checkpoint.py.
+    and the new vector is a LAZY localCheckpoint that materializes inside
+    that aggregate, so each iteration is ONE Spark job (as is the start
+    vector's checkpoint + dangling-mass aggregate).
+    The checkpoint truncates lineage (else the plan doubles per iteration);
+    durable resumable checkpoints live in plans/checkpoint.py.
   * driver scalars enter the next plan as lit() — Catalyst constant-folds.
+  * plans are pinned per query (broadcast/merge hints, explicit partition
+    counts, which AQE preserves); never toggle session-global AQE conf —
+    concurrent queries on the same session would see it.
 """
 
 from __future__ import annotations
@@ -38,8 +47,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _init_state(graph, v_df: DataFrame | None, x0_df: DataFrame | None = None) -> DataFrame:
-    """Build (url, v, dangling, rank) with v L2-normalized and rank = x0.
+def _init_state(graph, v_df: DataFrame | None, x0_df: DataFrame | None, n: int) -> DataFrame:
+    """Build (url, dangling, v, rank) with v L2-normalized and rank = x0;
+    ``n`` is the (nonzero) vertex count.
 
     dangling detection = LEFT ANTI JOIN of vertices against edge sources
     (reference derives it from all-zero rows of P, pagerank.py:132-134).
@@ -51,7 +61,6 @@ def _init_state(graph, v_df: DataFrame | None, x0_df: DataFrame | None = None) -
     streaming rebuild cadence passes the previous snapshot to roughly halve
     iterations per refresh.
     """
-    n = graph.num_vertices()
     srcs = graph.edges.select(F.col("src").alias("url")).distinct()
     base = graph.vertices.join(
         srcs.withColumn("_nd", F.lit(1)), "url", "left"
@@ -65,6 +74,8 @@ def _init_state(graph, v_df: DataFrame | None, x0_df: DataFrame | None = None) -
         # v_df is (url, v) L1-normalized; re-normalize to unit L2
         # (reference power_method does v /= torch.norm(v), pagerank.py:140)
         l2 = v_df.agg(F.sqrt(F.sum(F.col("v") * F.col("v")))).first()[0]
+        if not (l2 and l2 > 0):
+            raise ValueError("personalization vector v_df is empty or all zero")
         base = base.join(v_df, "url", "left").fillna(0.0, ["v"]).withColumn(
             "v", F.col("v") / F.lit(float(l2))
         )
@@ -93,10 +104,13 @@ def pagerank(
     broadcast_ranks: bool | None = None,
     x0_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Return (url, rank) with rank the L2-normalized PageRank vector.
+    """Return (url, rank) with rank the L2-normalized PageRank vector
+    (an empty frame for a graph with no vertices).
 
     ``checkpointer``: optional plans.checkpoint.IterationCheckpointer for
     durable resume; ``metrics``: optional list collecting per-iteration dicts.
+    ``v_df``: optional (url, v) personalization; ValueError when it is empty
+    or all zero.
 
     ``broadcast_ranks``: per-iteration join strategy. The rank vector is
     vertex-sized — orders of magnitude smaller than the edge table — so when
@@ -113,98 +127,88 @@ def pagerank(
     flags naturally select the shuffle path. Left to the planner, AQE can
     instead choose to broadcast the EDGE table (it often fits the 64 MB
     estimate at test scale), re-serializing the big side every iteration —
-    measured 4x slower at 1M edges; that is why the loop pins the strategy.
+    measured 4x slower at 1M edges; that is why the step pins the strategy.
     """
     num_parts = graph.num_partitions
-    edges = graph.edges
-    if broadcast_ranks is None:
-        broadcast_ranks = (
-            graph.num_vertices() < 10_000_000 and graph.num_edges() < 5_000_000
-        )
 
-    # The loop runs under whatever session conf the caller has (AQE stays ON
-    # by default): the plan is pinned per-query instead of via session conf —
-    # F.broadcast() forces the rank-side broadcast, repartition(P, 'url')
-    # with an explicit partition count is preserved by AQE's coalescer, and
-    # the cached edge layout fixes the big side. A previous version toggled
-    # spark.sql.adaptive.enabled session-globally around the loop; that
-    # silently changed concurrent queries on the same session (exactly what
-    # the streaming refresh cadence produces) and two concurrent loops'
-    # finally-restores raced — never do that.
-    return _iterate(
-        graph, alpha, v_df, max_iterations, epsilon, checkpointer,
-        metrics, broadcast_ranks, num_parts, edges, x0_df,
+    def plan():
+        bcast = broadcast_ranks
+        if bcast is None:
+            bcast = graph.num_vertices() < 10_000_000 and graph.num_edges() < 5_000_000
+
+        def layout(df):
+            return df.repartition(num_parts, "url")
+
+        def step(x, q):
+            x_src = x.select(F.col("url").alias("src"), "rank")
+            if bcast:
+                x_src = F.broadcast(x_src)
+            contribs = (
+                graph.edges.join(x_src, "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("weight") * F.col("rank")).alias("_c"))
+            )
+            return _fold(x, contribs, x.url == contribs.dst, alpha, q).repartition(
+                num_parts, "url"
+            )
+
+        return layout, step
+
+    return _power_iterate(
+        graph, plan, alpha=alpha, v_df=v_df, x0_df=x0_df, max_iterations=max_iterations,
+        epsilon=epsilon, checkpointer=checkpointer, metrics=metrics,
     )
 
 
-def _iterate(
-    graph, alpha, v_df, max_iterations, epsilon, checkpointer,
-    metrics, broadcast_ranks, num_parts, edges, x0_df=None,
+def _fold(x: DataFrame, contribs: DataFrame, cond, alpha: float, q: float) -> DataFrame:
+    """x left-joined with its summed in-contributions ``_c``: x's columns
+    except rank, plus the unnormalized next iterate ``_xun`` and the
+    previous iterate ``_prev``. The merge hint pins the join: left to the
+    planner, AQE converts it into a per-iteration broadcast of the
+    vertex-sized contribs, whose driver-serial build was measured 2.3x
+    slower over the loop (5x at local[32]/10M edges)."""
+    return x.join(contribs.hint("merge"), cond, "left").select(
+        *(x[c] for c in x.columns if c != "rank"),
+        (F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0)) + F.lit(q) * x.v).alias("_xun"),
+        x.rank.alias("_prev"),
+    )
+
+
+def _power_iterate(
+    graph, plan, *, alpha, v_df, x0_df, max_iterations, epsilon, checkpointer, metrics,
 ) -> DataFrame:
+    """The power method shared by every PageRank path.
 
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.try_resume()
-        if resumed is not None:
-            start_iter, x, dangling_mass = resumed
-        else:
-            x = _init_state(graph, v_df, x0_df)
+    ``plan()`` is called once, after the empty-graph and personalization
+    checks (so no path pays set-up, e.g. the CSR spill, for an empty graph
+    or a refused v_df), and returns ``(layout, step)``:
+    ``layout(df)`` partitions a (url, v, dangling, rank) frame the way
+    ``step`` wants it (adding any key columns), and ``step(x, q)`` returns
+    x's columns minus rank plus ``_xun`` (alpha P'x + q v) and ``_prev``.
+    """
+    resumed = checkpointer.try_resume() if checkpointer is not None else None
+    if resumed is not None:
+        start_iter, x, dangling_mass = resumed
+        layout, step = plan()
+        x = layout(x)
     else:
-        x = _init_state(graph, v_df, x0_df)
-
-    if start_iter == 0:
-        # ONE init job, same fusion as the loop body: the LAZY checkpoint
-        # materializes during the dangling-mass aggregate (eager checkpoint
-        # + agg was 2 jobs — at 9-iteration convergence runs the init jobs
-        # are a measurable slice of the fixed non-wall cost)
-        x = x.repartition(num_parts, "url").localCheckpoint(eager=False)
-        # initial dangling mass: x0 . a
+        start_iter = 0
+        n = graph.num_vertices()
+        if n == 0:
+            return graph.vertices.select("url", F.lit(0.0).alias("rank"))
+        state = _init_state(graph, v_df, x0_df, n)
+        layout, step = plan()
+        # the LAZY checkpoint materializes inside the dangling-mass aggregate
+        x = layout(state).localCheckpoint(eager=False)
         dangling_mass = x.agg(F.sum(F.col("rank") * F.col("dangling"))).first()[0] or 0.0
 
-    prev_ck = x  # checkpointed DataFrame whose blocks back the current x
+    prev = x  # frame whose checkpoint blocks back x; released once superseded
     for it in range(start_iter, max_iterations):
         t0 = time.monotonic()
         q = alpha * dangling_mass + (1.0 - alpha)
-
-        x_src = x.select(F.col("url").alias("src"), "rank")
-        if broadcast_ranks:
-            x_src = F.broadcast(x_src)
-        contribs = (
-            edges.join(x_src, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("weight") * F.col("rank")).alias("_c"))
-        )
-        # NOTE: broadcasting contribs here (it is vertex-sized) looks like it
-        # should save the vertex-table shuffle, but measured 5x SLOWER at
-        # local[32]/10M edges — the per-iteration broadcast build serializes
-        # on the driver and accumulated broadcasts GC-thrash. The plain
-        # shuffle join of two vertex-sized tables is cheap and stable. The
-        # merge hint pins that choice per-plan (without it, AQE sees the
-        # vertex-sized contribs stage and converts to exactly the broadcast
-        # join ruled out above — measured 2.3x slower over the loop); this
-        # replaces the old session-global AQE toggle.
-        new = (
-            x.join(contribs.hint("merge"), x.url == contribs.dst, "left")
-            .select(
-                x.url,
-                x.v,
-                x.dangling,
-                (
-                    F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0))
-                    + F.lit(q) * x.v
-                ).alias("_xun"),
-                x.rank.alias("_prev"),
-            )
-            .repartition(num_parts, "url")
-        )
-        # ONE job per iteration: a LAZY localCheckpoint materializes during
-        # the fused stats aggregate below, so the iteration costs a single
-        # action (vs eager checkpoint + agg = 2 jobs). Lineage still
-        # truncates at the checkpoint. (A persist()-chain variant deadlocks
-        # under AQE when the cached plan embeds the per-iteration broadcast
-        # exchange — do not revisit.)
-        new = new.localCheckpoint(eager=False)
-
+        # a persist() chain instead of localCheckpoint deadlocks under AQE
+        # when the cached plan embeds the per-iteration broadcast exchange
+        new = step(x, q).localCheckpoint(eager=False)
         s = new.agg(
             F.sum(F.col("_xun") * F.col("_xun")).alias("s2"),
             F.sum(F.col("_xun") * F.col("_prev")).alias("sp"),
@@ -215,7 +219,8 @@ def _iterate(
         dangling_mass = (s["sd"] or 0.0) / norm
 
         x = new.select(
-            "url", "v", "dangling", (F.col("_xun") / F.lit(norm)).alias("rank")
+            *(c for c in new.columns if c not in ("_xun", "_prev")),
+            (F.col("_xun") / F.lit(norm)).alias("rank"),
         )
         if metrics is not None:
             metrics.append(
@@ -228,14 +233,13 @@ def _iterate(
                 }
             )
         if checkpointer is not None:
-            x = checkpointer.save(it, x, dangling_mass, residual)
-        # free the previous iteration's checkpoint blocks
-        if prev_ck is not None:
-            try:
-                prev_ck.unpersist()
-            except Exception:
-                pass
-        prev_ck = new
+            out = x.select("url", "v", "dangling", "rank")
+            saved = checkpointer.save(it, out, dangling_mass, residual)
+            if saved is not out:
+                # continue from the durable copy: lineage and memory bounded
+                x = layout(saved)
+        prev.unpersist()
+        prev = new
         if residual < epsilon:
             break
 

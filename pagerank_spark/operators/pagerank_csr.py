@@ -1,16 +1,18 @@
-"""PageRank v2: CSR-blocked Arrow SpMV (input_hint mandate).
+"""PageRank v2: CSR-blocked Arrow SpMV.
 
 Identical math to operators/pagerank.py (reference pagerank.py:122-172); the
-SpMV changes from a JVM join+agg into block-local NumPy kernels.
+SpMV changes from a JVM join+agg into block-local NumPy kernels. This module
+supplies only a layout (hash-id column, repartition(B, vid)) and an SpMV step
+to pagerank.py's power-iteration driver, which owns start-up, resume, the
+fused per-iteration stats, normalization, metrics and checkpointing.
 
 Design — why this shape survives scale:
 
   * vertex ids are DETERMINISTIC 64-bit hashes of the url (xxhash64, salted
     on the astronomically-rare collision, checked with one vertex-sized
     aggregate). Pure projection — encoding the edge table needs NO join at
-    all (the previous design's double edges-join-ids was the dominant setup
-    cost at bench scale), and resumed runs are bit-exact because the ids are
-    a function of the data, not of a run-specific partition layout.
+    all, and resumed runs are bit-exact because the ids are a function of
+    the data, not of a run-specific partition layout.
   * the edge table is spilled ONCE per graph as per-block parquet
     (block = pmod(sid, B)) — entirely JVM-side: one columnar shuffle +
     write, no Arrow transfer of the edge table to Python (an applyInPandas
@@ -21,14 +23,13 @@ Design — why this shape survives scale:
     the arrays as ``.npy`` files in a node-local cache dir via atomic
     rename. Every task after that — whichever Python worker it lands on —
     serves the block via ``np.load(mmap_mode='r')``: the block cache is
-    the OS PAGE CACHE, per NODE, not per Python worker. This is the fix
-    for the round-2 design's hidden rescan: with B blocks and W reused
-    Python workers, task-to-worker placement is arbitrary, so over k
-    iterations a per-worker in-memory cache re-reads and re-factorizes
+    the OS PAGE CACHE, per NODE, not per Python worker: with B blocks and W
+    reused Python workers, task-to-worker placement is arbitrary, so over k
+    iterations a per-worker in-memory cache would re-read and re-factorize
     each block up to min(k, W) times (measured: 819 s vs the join-agg's
     170 s at 118M edges — ALL of it redundant decode). With the mmap'd
-    node cache, placement stops mattering. A naive cogroup design is still
-    worse: shipping edges JVM→Python every iteration costs O(|E|) Arrow
+    node cache, placement stops mattering. A naive cogroup design is
+    worse too: shipping edges JVM→Python every iteration costs O(|E|) Arrow
     traffic per iteration (measured 4.7x slower than v1 at 4M edges); here
     the per-iteration transfer is vertex-sized.
   * the spill lives in a fresh run-<uuid> directory every time it happens,
@@ -48,13 +49,10 @@ Design — why this shape survives scale:
     aggregation combines partial sums across blocks and an exchange-free
     join (both sides hash-partitioned to B on the vertex id) folds them into
     the next vector.
-  * one Spark job per iteration: the new vector is a LAZY localCheckpoint
-    that materializes during the fused stats aggregate (same trick as v1).
-  * the plan is pinned per-query, not via session conf: the contribs
-    aggregation rides an explicit repartition(B, 'did') (AQE preserves
-    user-specified partition counts) and the contribs fold is hinted
-    'merge' so AQE cannot rewrite the exchange-free join into a
-    per-iteration broadcast.
+  * the step's plan is pinned per query, not via session conf: the block
+    kernel input and the contribs aggregation ride explicit
+    repartition(B, block|did) (AQE preserves user-specified partition
+    counts), and the fold join shares v1's 'merge' hint (pagerank._fold).
 
 ``scratch_dir``: where the per-block arrays live. Defaults to a local
 tempdir (correct for local[*] and single-node). On a multi-executor cluster
@@ -65,9 +63,9 @@ comfortably in a worker's memory: at 10^12 edges and 4 GiB targets that is
 B ~= 10^4 blocks, which also keeps the per-task pandas group bounded during
 the spill.
 
-``checkpointer`` / ``x0_df``: same durable-resume and warm-start contract as
-v1 (reference power_method(v, x0, ...), pagerank.py:122,142-145). Resume
-re-derives the hash ids from the saved urls, so a killed job resumes
+``checkpointer`` / ``x0_df``: the driver's durable-resume and warm-start
+contract (reference power_method(v, x0, ...), pagerank.py:122,142-145). The
+layout re-derives the hash ids from the saved urls, so a killed job resumes
 bit-exactly.
 
 Cross-check test: must equal v1 (and the NumPy oracle) to 1e-6 per vertex.
@@ -76,9 +74,7 @@ Cross-check test: must equal v1 (and the NumPy oracle) to 1e-6 per vertex.
 from __future__ import annotations
 
 import json
-import math
 import os
-import time
 import uuid
 
 import numpy as np
@@ -86,7 +82,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.pagerank import _init_state
+from pagerank_spark.operators.pagerank import _fold, _power_iterate
 
 # per-process mmap handles (cheap: a handle is a view, the data lives in the
 # node's page cache, shared by ALL Python workers on the node). Keyed by the
@@ -126,7 +122,7 @@ _BLOCK_META = "_meta.json"
 # skip a cache base when the block's arrays would eat more than this share
 # of its CURRENT free space (tmpfs is bounded: filling /dev/shm turns later
 # allocations anywhere on the node into hard failures)
-_SHM_BUDGET_FRACTION = float(os.environ.get("PAGERANK_CSR_SHM_FRACTION", "0.5"))
+_SHM_BUDGET_FRACTION = 0.5
 
 
 def _cache_bases() -> list:
@@ -412,7 +408,7 @@ def _csr_state(graph, B: int, scratch_dir: str | None) -> dict:
     on the same LinkGraph (each spill gets a fresh run-<uuid> dir so worker
     caches can never serve stale arrays).
 
-    Setup-latency overlap (round-5): the collision check and the spill were
+    Setup-latency overlap: the collision check and the spill were
     the two big serial setup jobs (measured 2.5 s + 3.6 s at 16M edges /
     32 cores). Salt 0 collides with probability ~n²/2⁶⁵, so the spill runs
     OPTIMISTICALLY with salt 0 while the verification aggregate runs
@@ -484,111 +480,44 @@ def pagerank_csr(
     """Return (url, rank) — same contract as operators.pagerank.pagerank,
     including durable checkpoint/resume and x0 warm start."""
     B = num_blocks or graph.num_partitions
-    state = _csr_state(graph, B, scratch_dir)
-    return _iterate_csr(
-        graph, alpha, v_df, max_iterations, epsilon, B, metrics,
-        state["scratch"], state["salt"], checkpointer, x0_df,
+
+    def plan():
+        state = _csr_state(graph, B, scratch_dir)
+        spmv = _make_spmv_kernel(state["scratch"])
+        vid = _vid_expr(F.col("url"), state["salt"])
+
+        def layout(df):
+            # the hash id re-derives deterministically from the url
+            return df.withColumn("vid", vid).repartition(B, "vid")
+
+        def step(x, q):
+            # explicit repartition(B, block): the rank vector is tiny
+            # (vertex-sized), and AQE would coalesce the groupBy's internal
+            # exchange into ONE partition — serializing every block's SpMV
+            # kernel through a single Python worker (measured: 127 s/iter
+            # instead of ~8 s at 118M edges). A user-specified repartition
+            # is preserved by AQE and already satisfies the groupBy's
+            # clustering, so the stage keeps B parallel tasks.
+            xb = x.select(
+                "vid", "rank", _block_of(F.col("vid"), B).alias("block")
+            ).repartition(B, "block")
+            contribs = (
+                xb.groupby("block")
+                .applyInPandas(spmv, schema="did long, c double")
+                # explicit repartition: the aggregate runs exchange-free on
+                # top of it and stays aligned with x's hash(vid, B) layout
+                .repartition(B, "did")
+                .groupBy("did")
+                .agg(F.sum("c").alias("_c"))
+            )
+            # no repartition: the left join preserves x's hash(vid, B)
+            # layout, and the driver's localCheckpoint carries it into the
+            # next iteration
+            return _fold(x, contribs, x.vid == contribs.did, alpha, q)
+
+        return layout, step
+
+    return _power_iterate(
+        graph, plan, alpha=alpha, v_df=v_df, x0_df=x0_df, max_iterations=max_iterations,
+        epsilon=epsilon, checkpointer=checkpointer, metrics=metrics,
     )
-
-
-def _iterate_csr(
-    graph, alpha, v_df, max_iterations, epsilon, B, metrics, scratch, salt,
-    checkpointer=None, x0_df=None,
-) -> DataFrame:
-    spmv = _make_spmv_kernel(scratch)
-    vid = _vid_expr(F.col("url"), salt)
-
-    start_iter = 0
-    resumed = checkpointer.try_resume() if checkpointer is not None else None
-    if resumed is not None:
-        start_iter, x_saved, dangling_mass = resumed
-        # saved state is keyed by url; the hash ids re-derive deterministically
-        x = (
-            x_saved.select("url", "v", "dangling", "rank")
-            .withColumn("vid", vid)
-            .repartition(B, "vid")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        # same state builder as v1 (url, v, dangling, rank) + the hash id
-        x = (
-            _init_state(graph, v_df, x0_df)
-            .withColumn("vid", vid)
-            .repartition(B, "vid")
-            .localCheckpoint(eager=True)
-        )
-        dangling_mass = x.agg(F.sum(F.col("rank") * F.col("dangling"))).first()[0] or 0.0
-
-    prev_ck = x
-    for it in range(start_iter, max_iterations):
-        t0 = time.monotonic()
-        q = alpha * dangling_mass + (1.0 - alpha)
-
-        # explicit repartition(B, block): the rank vector is tiny (vertex-
-        # sized), and AQE would coalesce the groupBy's internal exchange
-        # into ONE partition — serializing every block's SpMV kernel through
-        # a single Python worker (measured: 127 s/iter instead of ~8 s at
-        # 118M edges). A user-specified repartition is preserved by AQE and
-        # already satisfies the groupBy's clustering, so the stage keeps B
-        # parallel tasks.
-        xb = x.select(
-            "vid", "rank", _block_of(F.col("vid"), B).alias("block")
-        ).repartition(B, "block")
-        contribs = (
-            xb.groupby("block")
-            .applyInPandas(spmv, schema="did long, c double")
-            # explicit repartition: AQE preserves user partition counts, so
-            # the aggregate runs exchange-free on top of it and stays aligned
-            # with x's hash(vid, B) layout for the fold join below
-            .repartition(B, "did")
-            .groupBy("did")
-            .agg(F.sum("c").alias("_c"))
-        )
-        new = (
-            x.join(contribs.hint("merge"), x.vid == contribs.did, "left")
-            .select(
-                x.url,
-                x.vid,
-                x.v,
-                x.dangling,
-                (F.lit(alpha) * F.coalesce(F.col("_c"), F.lit(0.0)) + F.lit(q) * x.v).alias("_xun"),
-                x.rank.alias("_prev"),
-            )
-            # no repartition: the left join preserves x's hash(vid, B) layout
-            # (contribs arrives hash(did, B) from its aggregate), and
-            # localCheckpoint carries the partitioning into the next iteration
-            .localCheckpoint(eager=False)  # materializes in the stats job below
-        )
-        s = new.agg(
-            F.sum(F.col("_xun") * F.col("_xun")).alias("s2"),
-            F.sum(F.col("_xun") * F.col("_prev")).alias("sp"),
-            F.sum(F.col("_xun") * F.col("dangling")).alias("sd"),
-        ).first()
-        norm = math.sqrt(s["s2"])
-        residual = math.sqrt(max(0.0, 2.0 - 2.0 * s["sp"] / norm))
-        dangling_mass = (s["sd"] or 0.0) / norm
-
-        x = new.select(
-            "url", "vid", "v", "dangling", (F.col("_xun") / F.lit(norm)).alias("rank")
-        )
-        if metrics is not None:
-            metrics.append(
-                {"iteration": it, "residual": residual, "norm": norm,
-                 "dangling_mass": dangling_mass, "wall_s": time.monotonic() - t0}
-            )
-        if checkpointer is not None:
-            x_out = x.select("url", "v", "dangling", "rank")
-            saved = checkpointer.save(it, x_out, dangling_mass, residual)
-            if saved is not x_out:
-                # continue from the durable copy (lineage + memory bounded),
-                # re-deriving the hash id from the url
-                x = saved.withColumn("vid", vid).repartition(B, "vid")
-        prev_ck.unpersist()
-        prev_ck = new
-        if residual < epsilon:
-            break
-
-    result = x.select("url", "rank")
-    out = result.localCheckpoint(eager=True)
-    prev_ck.unpersist()
-    return out

@@ -38,7 +38,8 @@ def make_seed_vector(graph, seeds: DataFrame) -> DataFrame:
         "v", F.coalesce(F.col("_s"), F.lit(0.0))
     ).drop("_s")
     total = v.agg(F.sum("v")).first()[0]
-    assert total and total > 0, "no seed url is a vertex of the graph"
+    if not (total and total > 0):
+        raise ValueError("no seed url is a vertex of the graph")
     return v.withColumn("v", F.col("v") / F.lit(float(total)))
 
 

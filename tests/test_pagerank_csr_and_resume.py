@@ -25,28 +25,30 @@ def test_csr_matches_joinagg_and_oracle(spark):
         g.unpersist()
 
 
-def test_checkpoint_resume_bitexact(spark, tmp_path, golden_graph):
+@pytest.mark.parametrize("impl", ["pagerank", "pagerank_csr"])
+def test_checkpoint_resume_bitexact(spark, tmp_path, golden_graph, impl):
     """Kill-after-iteration-K scenario: a resumed run must equal an
-    uninterrupted run bit-for-bit."""
+    uninterrupted run bit-for-bit, on both SpMV paths."""
+    pagerank = getattr(golden_graph, impl)
     ckdir_full = str(tmp_path / "full")
     ckdir_killed = str(tmp_path / "killed")
 
     full_ck = IterationCheckpointer(spark, ckdir_full, num_partitions=4, n_edges=10)
     full = {
         r["url"]: r["rank"]
-        for r in golden_graph.pagerank(epsilon=1e-6, checkpointer=full_ck).collect()
+        for r in pagerank(epsilon=1e-6, checkpointer=full_ck).collect()
     }
 
     # simulate a kill: run only 7 iterations (max_iterations=7), manifests stay
     killed_ck = IterationCheckpointer(spark, ckdir_killed, num_partitions=4, n_edges=10)
-    golden_graph.pagerank(epsilon=1e-6, max_iterations=7, checkpointer=killed_ck)
+    pagerank(epsilon=1e-6, max_iterations=7, checkpointer=killed_ck)
     assert killed_ck.latest_complete() == 6
 
     # resume: new checkpointer on the same dir picks up at iteration 7
     resume_ck = IterationCheckpointer(spark, ckdir_killed, num_partitions=4, n_edges=10)
     resumed = {
         r["url"]: r["rank"]
-        for r in golden_graph.pagerank(epsilon=1e-6, checkpointer=resume_ck).collect()
+        for r in pagerank(epsilon=1e-6, checkpointer=resume_ck).collect()
     }
     assert resumed == full  # bit-for-bit: dict equality on float64
 
@@ -114,9 +116,51 @@ def test_csr_unshared_scratch_refuses_instead_of_garbage(spark, tmp_path):
         shutil.copytree(run_dir, b_view)
         os.remove(f"{b_view}/{mod._MANIFEST}")
 
+        g._csr_state = {**state, "scratch": b_view}
         with pytest.raises(Exception) as ei:
-            mod._iterate_csr(g, 0.85, None, 2, 1e-6, 3, None,
-                             b_view, state["salt"]).collect()
+            g.pagerank_csr(epsilon=1e-6, max_iterations=2, num_blocks=3).collect()
         assert "no readable" in str(ei.value) or "_MANIFEST" in str(ei.value)
     finally:
         g.unpersist()
+
+
+@pytest.mark.parametrize("impl", ["pagerank", "pagerank_csr"])
+def test_empty_graph_returns_empty_ranks(spark, impl):
+    """The regex filter drops every edge of a multi-segment-only crawl; both
+    paths return an empty (url, rank) frame after zero iterations, and the
+    CSR path spills nothing."""
+    raw = spark.createDataFrame([("a/b/", "c/d/")], ["src", "dst"])
+    g = LinkGraph.from_edges(raw, num_partitions=2)
+    try:
+        assert g.num_vertices() == 0
+        metrics: list = []
+        ranks = getattr(g, impl)(metrics=metrics)
+        assert ranks.columns == ["url", "rank"]
+        assert ranks.collect() == []
+        assert metrics == []
+        assert g._csr_state is None
+    finally:
+        g.unpersist()
+
+
+@pytest.mark.parametrize("impl", ["pagerank", "pagerank_csr"])
+@pytest.mark.parametrize("rows", [[], [("a", 0.0), ("b", 0.0)]], ids=["empty", "zero"])
+def test_degenerate_personalization_raises(spark, impl, rows):
+    """An empty or all-zero v_df has no L2 normalization: ValueError on the
+    driver before any iteration (and before the CSR spill)."""
+    raw = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
+    g = LinkGraph.from_edges(raw, apply_regex_filter=False, num_partitions=2)
+    try:
+        v_df = spark.createDataFrame(rows, "url string, v double")
+        metrics: list = []
+        with pytest.raises(ValueError, match="all zero"):
+            getattr(g, impl)(v_df=v_df, metrics=metrics)
+        assert metrics == []
+        assert g._csr_state is None
+    finally:
+        g.unpersist()
+
+
+def test_personalization_query_without_match_raises(spark, golden_graph):
+    with pytest.raises(ValueError, match="matches no urls"):
+        golden_graph.make_personalization_vector("zzz")

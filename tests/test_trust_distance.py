@@ -36,7 +36,7 @@ def test_make_seed_vector(spark, tgraph):
 
 def test_make_seed_vector_no_match_raises(spark, tgraph):
     seeds = spark.createDataFrame([("nowhere",)], ["url"])
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError):
         make_seed_vector(tgraph, seeds)
 
 
